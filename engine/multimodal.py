@@ -232,10 +232,15 @@ def _gen_media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
         )
 
 
-def media_table(spark: SparkSession, sf: str) -> DataFrame:
+def media_table(spark: SparkSession, sf: str, mime: str) -> DataFrame:
     """The multimodal source shape: opaque binary payload + typed
-    metadata, payloads generated as REAL format bytes (BMP/WAV) per
-    doc_id. Downstream operators treat payload as opaque binary."""
+    metadata, payloads generated as REAL format bytes (BMP/WAV/MP4) per
+    doc_id. Downstream operators treat payload as opaque binary.
+
+    Only documents of media type ``mime`` are returned, and the filter
+    runs BEFORE the generator: ``mapInPandas`` is opaque to Catalyst, so
+    a filter applied to its output cannot be pushed below it, and every
+    call would build all three payload kinds to discard two thirds."""
     from engine.session import parallelize_scan, scan_units
 
     # single-row-group local scan would feed ONE Python worker; at
@@ -250,7 +255,7 @@ def media_table(spark: SparkSession, sf: str) -> DataFrame:
         .alias("mime"),
         "lang",
         "source",
-    )
+    ).filter(F.col("mime") == mime)
     return d.mapInPandas(
         _gen_media_batches,
         schema="doc_id long, mime string, payload binary, lang string, source string",
@@ -372,7 +377,7 @@ def multimodal_decode(spark: SparkSession, sf: str) -> DataFrame:
     REAL BMP header/pixel decode (module docstring). Repartitioned by
     doc_id first: at 100 TB blobs dominate row size, so decode
     parallelism must follow blob count, not input file splits."""
-    media = media_table(spark, sf).filter(F.col("mime") == "image/bmp")
+    media = media_table(spark, sf, "image/bmp")
     return (
         media.repartition("doc_id")
         .select("doc_id", "mime", "payload")
@@ -528,7 +533,7 @@ def multimodal_frames(spark: SparkSession, sf: str) -> DataFrame:
     no codec), where the explode must happen AFTER filtering to the
     wanted media type. Arrow-batched mapInPandas keyed on doc_id, so
     demux parallelism follows clip count, not input file splits."""
-    media = media_table(spark, sf).filter(F.col("mime") == "video/mp4")
+    media = media_table(spark, sf, "video/mp4")
     return (
         media.repartition("doc_id")
         .select("doc_id", "payload")
@@ -597,7 +602,7 @@ def multimodal_audio_features(spark: SparkSession, sf: str) -> DataFrame:
     other half of the multimodal checklist next to resize/frame-sample):
     filter to the media type FIRST so only audio bytes flow into the
     Python stage."""
-    media = media_table(spark, sf).filter(F.col("mime") == "audio/wav")
+    media = media_table(spark, sf, "audio/wav")
     return (
         media.repartition("doc_id")
         .select("doc_id", "payload")
@@ -643,7 +648,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     The image analogue of dedup_simhash: at 100 TB the hash pass is
     narrow (no shuffle), and the only shuffle moves (doc_id, phash)
     pairs — never the blobs themselves."""
-    media = media_table(spark, sf).filter(F.col("mime") == "image/bmp")
+    media = media_table(spark, sf, "image/bmp")
     hashed = media.repartition("doc_id").mapInPandas(
         _phash_batches, "doc_id long, phash long"
     )

@@ -36,7 +36,22 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 
 
 def get_spark(app_name: str = "engine") -> SparkSession:
+    """The engine's session: local mode, AQE, UTC, Arrow, no UI.
+
+    Python workers: under pyspark's own daemon, every task a Python
+    worker runs (``mapInPandas``, pandas UDFs and UDTFs,
+    ``createDataFrame`` from an RDD) pays about 0.25 CPU-s and 0.2 s of
+    wall time whether it does work or not. Each task calls ``importlib.invalidate_caches()``, and CPython's
+    zipimporter re-reads the whole directory of ``pyspark.zip`` (1,328
+    entries) once per pyspark package loaded from it, about 16 times.
+    This session starts its workers from the engine's own daemon,
+    :mod:`engine.pyworker`, which re-reads an archive only when it
+    changed on disk. ``spark.python.daemon.module`` is a static conf, so
+    :func:`tune` cannot apply it: a session not built here (such as the
+    driver's own) gets the saving only if it sets the same conf, with the
+    repository root on the workers' ``PYTHONPATH``."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -46,6 +61,10 @@ def get_spark(app_name: str = "engine") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "engine.pyworker")
+        # workers import the daemon module from the repository root,
+        # whatever the caller's working directory
+        .config("spark.executorEnv.PYTHONPATH", root)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .getOrCreate()
     )

@@ -314,6 +314,33 @@ def test_multimodal_audio_features_real_wav(spark):
         assert r["zcr"] > 0, r
 
 
+def test_multimodal_mime_filter_runs_before_media_generator(spark):
+    """``mapInPandas`` is opaque to Catalyst: a mime filter applied to
+    the media generator's output stays above it, and the generator then
+    builds BMP, WAV and MP4 payloads for every document. In each
+    executed plan (final and initial), no Filter on ``mime`` may sit
+    above ``_gen_media_batches``, and a Filter must remain below it."""
+    import re
+
+    for key in (
+        "multimodal_decode",
+        "multimodal_frames",
+        "multimodal_audio_features",
+        "multimodal_phash_dedup",
+    ):
+        df = QUERIES[key](spark, SF_SMOKE)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        sections = [s for s in re.split(r"== \w+ Plan ==", plan) if "_gen_media_batches" in s]
+        assert sections, f"{key}: no media generator in plan\n{plan}"
+        for section in sections:
+            lines = section.splitlines()
+            at = next(i for i, ln in enumerate(lines) if "_gen_media_batches" in ln)
+            above = [ln for ln in lines[:at] if "Filter" in ln and "mime" in ln]
+            assert not above, f"{key}: mime filter above the generator: {above}"
+            assert any("Filter" in ln for ln in lines[at + 1 :]), f"{key}\n{section}"
+
+
 def test_connected_components_planted_chain(spark):
     from engine.similarity import connected_components
 

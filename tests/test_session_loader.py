@@ -78,3 +78,73 @@ def test_tiny_df_one_partition(spark):
     assert [r["x"] for r in df.collect()] == [0, 1, 2, 3, 4]
     empty = tiny_df(spark, [], "x int, y long")
     assert empty.count() == 0 and len(empty.schema) == 2
+
+
+def _write_zip(path, modules: dict) -> None:
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_pyworker_rereads_zip_only_when_it_changes(monkeypatch, tmp_path):
+    import importlib
+    import sys
+    import zipimport
+
+    import engine.pyworker as W
+
+    # install() patches process-wide; register the originals for restore
+    monkeypatch.setattr(zipimport, "_read_directory", zipimport._read_directory)
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    monkeypatch.setattr(W, "_STAMPS", {})
+    W.install()
+    archive = tmp_path / "pyworker_mods.zip"
+    _write_zip(archive, {"pyworker_mod_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("pyworker_mod_a", "pyworker_mod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("pyworker_mod_a").X == 1
+    importer = sys.path_importer_cache[str(archive)]
+    assert isinstance(importer, zipimport.zipimporter)
+
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: reads.append(a) or real(a)
+    )
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert reads == []  # unchanged archive: no directory read at all
+
+    # a rewritten archive (new module, new size) is read again, once
+    _write_zip(archive, {"pyworker_mod_a": "X = 1\n", "pyworker_mod_b": "Y = 2\n"})
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert reads == [str(archive)]
+    assert importlib.import_module("pyworker_mod_b").Y == 2
+
+
+def test_get_spark_runs_python_workers_from_engine_daemon(spark):
+    import pandas as pd
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.daemon.module") == "engine.pyworker"
+
+    def patched_in_worker(batches):
+        import zipimport
+
+        for pdf in batches:
+            name = zipimport.zipimporter.invalidate_caches.__name__
+            yield pd.DataFrame({"id": pdf["id"], "fn": name})
+
+    rows = (
+        tiny_df(spark, [(i,) for i in range(3)], "id long")
+        .mapInPandas(patched_in_worker, "id long, fn string")
+        .collect()
+    )
+    assert sorted(r["id"] for r in rows) == [0, 1, 2]
+    assert {r["fn"] for r in rows} == {"_cached_invalidate_caches"}
