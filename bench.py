@@ -8,6 +8,7 @@ local[$SPARK_GRAFT_CPUS]; each query is materialized with the noop sink
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -89,8 +90,6 @@ _CANARY_STREAM_REF: dict[str, float] = {
 
 
 def run_canary(spark, queries, sf_dir) -> dict:
-    import math
-
     def _measure(refs: dict[str, float]) -> tuple[dict, float | None]:
         times: dict[str, float] = {}
         for key in refs:
@@ -284,14 +283,38 @@ def emit_line(payload: dict) -> str:
     """Serialize the bench payload to the ONE-line JSON the driver
     parses, and self-verify the contract before anything is printed
     (VERDICT r13 what's-wrong #5: a bench whose final stdout line does
-    not parse costs the round its perf comparison)."""
-    line = json.dumps(payload)
+    not parse costs the round its perf comparison).
+
+    Strict JSON has no NaN or Infinity: a non-finite number anywhere in
+    the payload becomes ``null``, and its dotted path is listed under
+    ``nonfinite``, so one bad sample costs its own value, not the line."""
+    paths: list[str] = []
+    payload = _null_nonfinite(payload, "", paths)
+    if paths:
+        payload["nonfinite"] = paths
+    line = json.dumps(payload, allow_nan=False)
     if "\n" in line or "\r" in line:
         raise AssertionError("bench JSON must be a single line")
     reparsed = json.loads(line)  # self-parse before exit
     if reparsed.get("queries") != payload.get("queries"):
         raise AssertionError("bench JSON round-trip mismatch")
     return line
+
+
+def _null_nonfinite(value, path: str, paths: list[str]):
+    """``value`` with every non-finite float replaced by ``None``; the
+    dotted path of each one is appended to ``paths``."""
+    if isinstance(value, float) and not math.isfinite(value):
+        paths.append(path)
+        return None
+    if isinstance(value, dict):
+        return {
+            k: _null_nonfinite(v, f"{path}.{k}" if path else str(k), paths)
+            for k, v in value.items()
+        }
+    if isinstance(value, (list, tuple)):
+        return [_null_nonfinite(v, f"{path}.{i}", paths) for i, v in enumerate(value)]
+    return value
 
 
 if __name__ == "__main__":

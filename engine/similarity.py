@@ -2174,7 +2174,9 @@ def _pq_encode_against(
     # generation builds). cids are contiguous 0..K-1 per subspace
     # (row_number-1 in _pq_codebook) and cents is array_sort'ed on
     # (cid, ...), so cents[cid+1].csub IS the winning centroid; the
-    # (d2i, cid) min is unchanged, hence identical codes.
+    # (d2i, cid) min is unchanged, hence identical codes. A codebook with
+    # gapped cids would make that lookup return ANOTHER centroid, so the
+    # lookup checks the cid it found and fails the query instead.
     best = F.expr(
         "element_at(array_sort(transform(cents, c -> struct("
         "cast(round(aggregate(zip_with(vsub, c.csub,"
@@ -2188,7 +2190,13 @@ def _pq_encode_against(
             "vec_id",
             "s",
             F.col("b.cid").alias("cid"),
-            F.expr("element_at(cents, b.cid + 1).csub").alias("csub"),
+            F.expr(
+                "CASE WHEN element_at(cents, b.cid + 1).cid = b.cid"
+                " THEN element_at(cents, b.cid + 1).csub"
+                " ELSE raise_error(concat('PQ codebook cids are not contiguous"
+                " 0..K-1: subspace ', s, ' has no cid ', b.cid,"
+                " ' at position ', b.cid + 1)) END"
+            ).alias("csub"),
         )
     )
 

@@ -10,6 +10,8 @@ import json
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
@@ -71,3 +73,25 @@ def test_cold_generation_keys_are_registered():
     q = all_queries()
     for key in bench._COLD_GEN_KEYS:
         assert key in q
+
+
+
+def test_emit_line_nulls_nonfinite_numbers_and_names_them():
+    """A NaN or infinite sample costs its own value, not the whole line:
+    it is written as null (never a bare NaN/Infinity token, which strict
+    JSON parsers reject), its path is listed under ``nonfinite``, and
+    every other value survives."""
+    line = bench.emit_line(
+        {
+            "value": float("nan"),
+            "queries": {"a": float("nan"), "b": 0.5},
+            "drift_canary": {"factor": float("inf"), "refs": [1.0, float("-inf")]},
+        }
+    )
+    parsed = json.loads(line, parse_constant=pytest.fail)
+    assert parsed["value"] is None
+    assert parsed["queries"] == {"a": None, "b": 0.5}
+    assert parsed["drift_canary"] == {"factor": None, "refs": [1.0, None]}
+    assert parsed["nonfinite"] == [
+        "value", "queries.a", "drift_canary.factor", "drift_canary.refs.1"
+    ]

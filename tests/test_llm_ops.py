@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from engine.registry import all_queries
@@ -599,3 +601,30 @@ def test_bpe_train_counts_non_increasing(spark):
     counts = [r["cnt"] for r in rows]
     assert counts == sorted(counts, reverse=True), counts
     assert all(r["new_symbol"] == r["pair"].replace(" ", "") for r in rows)
+
+
+def test_pq_encode_rejects_gapped_codebook(spark):
+    """The encode looks a winning centroid up by position (cid + 1), which
+    is only right for cids 0..K-1: a contiguous codebook encodes to its
+    nearest centroids, and a gapped one fails the query instead of
+    returning another centroid's coordinates."""
+    from engine.session import tiny_df
+    from engine.similarity import _pq_encode_against
+
+    cb_schema = "cid int, s int, csub array<double>"
+    corpus = tiny_df(
+        spark,
+        [(7, 0, [0.1, 0.0]), (8, 0, [0.9, 1.0])],
+        "vec_id long, s int, vsub array<double>",
+    )
+    contiguous = tiny_df(spark, [(0, 0, [0.0, 0.0]), (1, 0, [1.0, 1.0])], cb_schema)
+    got = sorted(
+        (r.vec_id, r.cid, list(r.csub))
+        for r in _pq_encode_against(corpus, contiguous).collect()
+    )
+    assert got == [(7, 0, [0.0, 0.0]), (8, 1, [1.0, 1.0])]
+    # cids 1 and 3: vec 7's winner is cid 1, whose lookup position 2
+    # holds cid 3
+    gapped = tiny_df(spark, [(1, 0, [0.0, 0.0]), (3, 0, [1.0, 1.0])], cb_schema)
+    with pytest.raises(Exception, match="not contiguous"):
+        _pq_encode_against(corpus.where("vec_id = 7"), gapped).collect()

@@ -148,3 +148,37 @@ def test_get_spark_runs_python_workers_from_engine_daemon(spark):
     )
     assert sorted(r["id"] for r in rows) == [0, 1, 2]
     assert {r["fn"] for r in rows} == {"_cached_invalidate_caches"}
+
+
+#: the keys of perfbench's ``reference_sql`` workload
+_REFERENCE_SQL_KEYS = (
+    "wiki_rank_reduce", "so_grouped", "tu_grouped_sql",
+    "q3_shipping_priority", "q6_forecast_revenue",
+    "q13_customer_distribution", "join_q5_local_supplier",
+    "join_q18_large_orders",
+)
+
+
+def test_warm_pass_compiles_no_generated_classes(spark):
+    """A second pass over the same keys finds every generated class in
+    Spark's codegen cache. With Spark's default of 100 entries the cache
+    is smaller than the classes one such pass compiles (about 110), so
+    every warm pass recompiled 57 of them."""
+    from engine.registry import all_queries
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        S.CODEGEN_CACHE_ENTRIES
+    )
+    qs = all_queries()
+    compiled = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    for k in _REFERENCE_SQL_KEYS:
+        qs[k](spark, SF_ORACLE).toPandas()
+    recompiled = {}
+    for k in _REFERENCE_SQL_KEYS:
+        n = compiled.getCount()
+        qs[k](spark, SF_ORACLE).toPandas()
+        recompiled[k] = compiled.getCount() - n
+    assert sum(recompiled.values()) == 0, recompiled
